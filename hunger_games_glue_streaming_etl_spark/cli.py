@@ -16,7 +16,7 @@ Usage::
         --tribute-csv /data/tributeData.csv \
         --game-json /data/gameData.json \
         --output-dir /data/out \
-        [--available-now] [--max-files-per-trigger 1]
+        [--available-now] [--max-files-per-trigger N]
 """
 
 from __future__ import annotations
@@ -49,7 +49,12 @@ def build_parser() -> argparse.ArgumentParser:
         help="game boundary config JSON (reference A4)",
     )
     p.add_argument("--output-dir", required=True, help="root for latest/, archive/, checkpoint/")
-    p.add_argument("--max-files-per-trigger", type=int, default=1)
+    p.add_argument(
+        "--max-files-per-trigger",
+        type=int,
+        default=None,
+        help="cap on files per micro-batch (default: every file present when the trigger fires)",
+    )
     p.add_argument(
         "--available-now",
         action="store_true",

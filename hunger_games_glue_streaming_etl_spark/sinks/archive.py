@@ -8,10 +8,9 @@ layout is recoverable, and the write is one distributed job instead of N
 HTTPS round-trips.
 
 Op A10 (``:78-82``) fans each row out to both sinks; here ``DualSink`` runs
-both writes inside one ``foreachBatch``, preserving the reference's
-at-least-once + idempotent-end-state semantics (SURVEY.md §3 step 6): the
-archive append may duplicate on retry (dedupable by event id), the keyed
-upsert is idempotent by construction.
+both writes inside one ``foreachBatch`` and hands both the batch's epoch:
+the archive overwrites its ``epoch=N`` directory on retry, and the keyed
+upsert skips an epoch its lineage already committed (SURVEY.md §3 step 6).
 """
 
 from __future__ import annotations
@@ -66,6 +65,6 @@ class DualSink:
         try:
             self.archive.append(batch_df, epoch_id)
             projected = self.project(batch_df) if self.project else batch_df
-            self.latest.upsert(projected)
+            self.latest.upsert(projected, epoch_id=epoch_id)
         finally:
             batch_df.unpersist()

@@ -26,8 +26,11 @@ def read_json_stream(
 ) -> DataFrame:
     """Unbounded DataFrame over JSON files (JSON-lines or one-object files).
 
-    ``maxFilesPerTrigger`` bounds micro-batch size — the knob that keeps a
-    backlogged 100 TB directory from becoming one giant first batch.
+    ``max_files_per_trigger=None`` (the default) admits every file present
+    when a trigger fires, so a backlog drains in one micro-batch.  An
+    integer sets ``maxFilesPerTrigger``, bounding micro-batch size — the
+    knob that keeps a backlogged 100 TB directory from becoming one giant
+    first batch.
     """
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

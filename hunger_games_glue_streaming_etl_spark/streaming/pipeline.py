@@ -3,8 +3,9 @@
 Parity map (``script/TributeStreamingJob.py``):
 
 * lines 101-103 Kinesis-via-catalog source  → schema'd file JSON stream
-  (earliest-position semantics; ``maxFilesPerTrigger=1`` reproduces the
-  scenario-by-scenario replay cadence);
+  (earliest-position semantics; like the Kinesis source, which reads
+  every record available in its batch window, each trigger admits every
+  file present when it fires, so a backlog drains in one micro-batch);
 * lines 106-135 joins + CASE derivations    → the shared batch transforms
   (stream-static broadcast joins — identical code path);
 * lines 139-144 ``foreach`` row sink, update mode, checkpoint →
@@ -43,22 +44,32 @@ def start_tribute_stream(
     latest_path: str,
     archive_path: str,
     checkpoint_path: str,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int | None = None,
     available_now: bool = False,
     source: DataFrame | None = None,
     track_changes: bool = False,
 ) -> tuple[StreamingQuery, ParquetLatestSink]:
     """Start the continuous tribute-status query; returns (query, latest sink).
 
+    ``max_files_per_trigger`` caps the files one micro-batch admits.  The
+    default ``None`` admits every file present when the trigger fires: a
+    stream that keeps up still sees one file per trigger, and a backlog
+    (a slow consumer, a restart after an outage) drains in one trigger
+    that pays the fixed per-batch cost once.  Pass 1 to replay files one
+    micro-batch each.
+
     ``available_now=True`` uses the AvailableNow trigger: process everything
-    currently in the source (respecting ``maxFilesPerTrigger`` batch sizing)
-    and terminate — the idiomatic drain/backfill mode (vs. the default
-    run-forever micro-batch trigger, reference A11).
+    currently in the source (respecting ``max_files_per_trigger`` batch
+    sizing) and terminate — the idiomatic drain/backfill mode (vs. the
+    default run-forever micro-batch trigger, reference A11).
 
     ``track_changes=True`` makes the latest sink also emit an exactly-once
     CDC changelog (insert/update/touch per key per epoch) under
     ``latest_path + "_changes"`` — the seam for downstream incremental
-    consumers (SCD2 refresh, cache invalidation).
+    consumers (SCD2 refresh, cache invalidation).  An epoch covers every
+    file admitted in its trigger, so two events for one key within an
+    epoch give one op (for the later event) against the state before the
+    epoch.
 
     ``source`` injects any unbounded DataFrame with the tribute stream
     schema in place of the default file stream — e.g.

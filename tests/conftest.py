@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import duckdb
+import pandas as pd
 import pytest
 
 from hunger_games_glue_streaming_etl_spark.session import get_spark
@@ -40,6 +41,17 @@ def assert_matches_oracle(spark_df, oracle_con, sql, check_values=True):
     if not check_values or len(sdf) == 0:
         return
     cols = sorted(sdf.columns)
-    s = sdf[cols].astype(str).apply(lambda r: "|".join(r), axis=1).sort_values().tolist()
-    o = odf[cols].astype(str).apply(lambda r: "|".join(r), axis=1).sort_values().tolist()
+    s, o = _row_strings(sdf[cols]), _row_strings(odf[cols])
     assert s == o, f"values differ; first spark={s[:3]} oracle={o[:3]}"
+
+
+def _row_strings(df):
+    """Sorted ``|``-joined string form of each row.  Float columns get
+    ``+ 0.0`` first, which turns -0.0 into 0.0: the two compare equal as
+    numbers but print differently, and engines disagree on the sign of a
+    zero result."""
+    df = df.copy()
+    for c in df.columns:
+        if pd.api.types.is_float_dtype(df[c]):
+            df[c] = df[c] + 0.0
+    return df.astype(str).apply(lambda r: "|".join(r), axis=1).sort_values().tolist()
